@@ -105,12 +105,20 @@ def exact_percentiles_ranked(
     the broadcast offsets table stays cluster-bound at 100 TB; a
     skewed bucket degrades to a bigger sort task, never to a wrong
     rank. Caller contract: non-empty input (the built-in returns NULL
-    there; this returns a row of NULLs)."""
+    there; this returns a row of NULLs) and a non-empty ``ps``
+    (ValueError otherwise). Values whose double cast is NULL (non-numeric
+    strings with ANSI off) are dropped like NULLs and not counted, as in
+    the built-in."""
+    if not ps:
+        raise ValueError("exact_percentiles_ranked: ps must be non-empty")
     nb = 32 * df.sparkSession.sparkContext.defaultParallelism
-    vals = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(value_col).alias("_v")
+    # ranks and interpolation run on the double value, as Percentile's
+    # implicit input cast does; the cast is NULL exactly when the value
+    # is NULL or non-numeric, so both are dropped before counting
+    vals = df.select(F.col(value_col).cast("double").alias("_v")).filter(
+        F.col("_v").isNotNull()
     )
-    vd = F.col("_v").cast("double")
+    vd = F.col("_v")
     finite = ~F.isnan(vd) & (vd > float("-inf")) & (vd < float("inf"))
     st = vals.agg(
         (F.min(F.when(finite, vd)) / 2).alias("_lo2"),

@@ -4080,19 +4080,20 @@ def sim_ann_lsh_det(spark, sf_dir):
             ),
         ).alias("_d"),
     )
-    codes = dots.select(
+    # the per-table codes are rendered as SQL text — one parse instead
+    # of a py4j round trip per Column node (the r11 one-parse
+    # discipline); plane p of table t reads the 1-based `_d` slot
+    # t·P+p+1 and the terms fold left to right from 0
+    codes = dots.selectExpr(
         "vec_id",
         *[
-            sum(
-                (
-                    F.when(
-                        F.element_at("_d", t * _ANN_LSH_DET_PLANES + p + 1) >= 0,
-                        F.lit(1 << p),
-                    ).otherwise(F.lit(0))
-                    for p in range(_ANN_LSH_DET_PLANES)
-                ),
-                start=F.lit(0),
-            ).alias(f"c{t}")
+            "0"
+            + "".join(
+                f" + CASE WHEN element_at(_d, {t * _ANN_LSH_DET_PLANES + p + 1})"
+                f" >= 0 THEN {1 << p} ELSE 0 END"
+                for p in range(_ANN_LSH_DET_PLANES)
+            )
+            + f" AS c{t}"
             for t in range(_ANN_LSH_DET_TABLES)
         ],
     )

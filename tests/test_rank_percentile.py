@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import struct
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from ballista_mvp_spark.operators.aggregates import exact_percentiles_ranked
@@ -107,3 +109,24 @@ def test_constant_column_single_bucket(spark):
     # result) — the all-ties frame.
     df = spark.createDataFrame([(7.5,)] * 1000, "v double").repartition(9)
     assert_bit_equal(df, "v", PS_HISTO)
+
+
+def test_empty_ps_raises_value_error(spark):
+    df = spark.createDataFrame([(1.0,), (2.0,)], "v double")
+    with pytest.raises(ValueError, match="ps must be non-empty"):
+        exact_percentiles_ranked(df, "v", [])
+
+
+def test_non_numeric_values_dropped_and_not_counted(spark):
+    # With ANSI off a non-numeric string casts to NULL. Such a row must
+    # not count toward n: if it did, every rank position would shift
+    # and the result would no longer match the built-in.
+    rows = [(str(float(i)),) for i in range(41)] + [("abc",), ("",), (None,)] * 5
+    df = spark.createDataFrame(rows, "v string").repartition(4)
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        assert_bit_equal(df, "v", PS_HISTO)
+        assert _ranked(df, "v", [1.0]) == [40.0]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)

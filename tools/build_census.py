@@ -52,7 +52,12 @@ def main() -> None:
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     top = sorted(out.items(), key=lambda kv: -kv[1])[:15]
-    print(json.dumps({"total": round(sum(out.values()), 2), "top": top}))
+    ok = [v for v in out.values() if v >= 0]
+    print(
+        json.dumps(
+            {"total": round(sum(ok), 2), "errors": len(out) - len(ok), "top": top}
+        )
+    )
 
 
 if __name__ == "__main__":
